@@ -23,6 +23,12 @@ object Detect {
 
   val MaxBatchTexts = 1000 // api.py:53
 
+  /** One text's `PIIResult` fields as a struct `_1`..`_5`. */
+  private val scrubUdf = udf { (text: String) =>
+    val r = Scrubber.scrub(text)
+    (r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error)
+  }
+
   /** Distributed batch detect: one row per input text, index-aligned. */
   def detectBatch(spark: SparkSession, texts: Seq[String]): DataFrame = {
     if (texts.isEmpty) throw EmptyInputError("texts list") // api.py:321-322
@@ -30,10 +36,6 @@ object Detect {
       throw InvalidFieldError("texts",
         s"list length ${texts.length} exceeds maximum allowed $MaxBatchTexts") // api.py:323-327
     import spark.implicits._
-    val scrubUdf = udf { (text: String) =>
-      val r = Scrubber.scrub(text)
-      (r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error)
-    }
     texts.zipWithIndex.toDF("text", "idx")
       .withColumn("r", scrubUdf(col("text")))
       .select(
@@ -63,10 +65,6 @@ object Detect {
     val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
     ext match {
       case "txt" =>
-        val scrubUdf = udf { (text: String) =>
-          val r = Scrubber.scrub(text)
-          (r.hasPii, r.scrubbed, r.piiTypes, r.entities, r.error)
-        }
         Uploads.readTxt(spark, path)
           .withColumn("r", scrubUdf(col("line")))
           .select(col("line"), col("r._1").as("hasPii"),

@@ -47,6 +47,7 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     */
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "server already started")
+    HttpApi.noDelay()
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.setExecutor(Executors.newFixedThreadPool(poolSize))
     server.createContext("/health", route("GET", health))
@@ -344,6 +345,18 @@ final class HttpApi(spark: SparkSession, modelDir: String, poolSize: Int = 4) {
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
+}
+
+object HttpApi {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** `com.sun.net.httpserver` sends a response's head and body in two
+    * writes, and without TCP_NODELAY unless this property is set before its
+    * first server is created. A client that delays its ACK then holds each
+    * body back ≈40 ms on a kept-alive connection. A value the user set wins.
+    */
+  private def noDelay(): Unit =
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
 }
 
 /** Minimal multipart/form-data parser (binary-safe) — enough for the

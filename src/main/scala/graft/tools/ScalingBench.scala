@@ -6,9 +6,11 @@ import graft.fixtures.Fixtures
 import graft.pipeline.QualityFilter
 
 /** N→4N scaling evidence (BASELINE.json: efficiency ≥ 0.8 from N to 4N
-  * executors). No real cluster exists in this sandbox, so the same job runs
-  * at `local[8]` and `local[32]` over the identical pre-materialized corpus
-  * and we report throughput at both plus efficiency = (T_8 / T_32) / 4.
+  * executors). Without a real cluster the same job runs at `local[c1]` and
+  * `local[c2]` over the identical pre-materialized corpus, and we report
+  * throughput at both plus efficiency = (T_c1 / T_c2) / (c2 / c1). By
+  * default c2 is the host's core count and c1 a quarter of it (1→4 on a
+  * 4-core host, 8→32 on a 32-core one).
   *
   * The corpus is written once to Parquet (64 splits so both levels have
   * full input parallelism); each measurement is a fresh SparkSession that
@@ -40,20 +42,22 @@ object ScalingBench {
     sec
   }
 
+  /** Usage: `ScalingBench [nFiles [c1 [c2]]]`. */
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 400000L
-    // N→4N pair; default 8→32. On this box 8→32 threads is OUTSIDE the
-    // hardware's linear region (pure-JVM thread scaling is only ~2.9× from
-    // turbo + memory bandwidth — BENCH.md); 2→8 measures the same job in
-    // the linear region, which is what a 4× EXECUTOR scale-out (4× memory
-    // subsystems) corresponds to.
-    val c1 = if (args.length > 1) args(1).toInt else 8
-    val c2 = if (args.length > 2) args(2).toInt else c1 * 4
+    // N→4N pair from the host's cores. Pure-JVM thread scaling on one host
+    // flattens near its full core count (turbo + memory bandwidth; on a
+    // 32-core box 8→32 gave ~2.9×, BENCH.md), while a 4× EXECUTOR scale-out
+    // also brings 4× memory subsystems; pass a smaller pair to stay in the
+    // linear region.
+    val cores = Runtime.getRuntime.availableProcessors
+    val c1 = if (args.length > 1) args(1).toInt else math.max(1, cores / 4)
+    val c2 = if (args.length > 2) args(2).toInt else if (args.length > 1) c1 * 4 else cores
     val corpusPath = s"/tmp/graft-scaling-corpus-$n"
 
     if (!new java.io.File(corpusPath).exists()) {
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+      val s = SparkSession.builder().master(s"local[$c2]")
+        .config("spark.sql.shuffle.partitions", c2.toString)
         .config("spark.ui.enabled", "false").getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       Fixtures.generate(s, n).repartition(128).write.mode("overwrite").parquet(corpusPath)

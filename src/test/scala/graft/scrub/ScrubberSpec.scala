@@ -94,6 +94,11 @@ class ScrubberSpec extends AnyFunSuite {
     assert(Scrubber.scrub("x" * 50001).error == Scrubber.ErrTooLarge)
     assert(Scrubber.scrub("x" * 50000).error == null) // boundary: exactly max ok
   }
+  test("blank means String.trim's rule: every char <= U+0020, no Unicode spaces") {
+    assert(Scrubber.scrub("\u0001\n").error == Scrubber.ErrEmpty)
+    val emSpace = Scrubber.scrub("\u2003")
+    assert(emSpace.error == null && emSpace.scrubbed == "\u2003")
+  }
 
   // --- properties (SURVEY.md §5) -------------------------------------------
   test("property: scrub never throws and spans are in-bounds, disjoint, sorted") {

@@ -1,6 +1,7 @@
 package graft.serve
 
-import java.net.{HttpURLConnection, URI}
+import java.io.{BufferedInputStream, DataInputStream}
+import java.net.{HttpURLConnection, Socket, URI}
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.BeforeAndAfterAll
@@ -166,5 +167,44 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("wrong method yields 405, not a handler crash") {
     val (s, b) = call(port, "GET", "/detect")
     assert(s == 405 && b.contains("MethodNotAllowed"), s"$s $b")
+  }
+
+  test("back-to-back POST /detect on one kept-alive connection is not held by delayed ACKs") {
+    val body = """{"text":"mail me at bob@example.com now"}""".getBytes(StandardCharsets.UTF_8)
+    val request = (s"POST /detect HTTP/1.1\r\nHost: 127.0.0.1:$port\r\n" +
+      s"Content-Type: application/json\r\nContent-Length: ${body.length}\r\n\r\n")
+      .getBytes(StandardCharsets.US_ASCII) ++ body
+    val sock = new Socket("127.0.0.1", port)
+    try {
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(10000)
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') { assert(c >= 0, "connection closed"); if (c != '\r') sb += c.toChar; c = in.read() }
+        sb.result()
+      }
+      // one request in one write; the response read in full, leaving the connection open
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        sock.getOutputStream.write(request)
+        assert(line().startsWith("HTTP/1.1 200"))
+        var length = -1
+        var h = line()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:")) length = h.substring(15).trim.toInt
+          h = line()
+        }
+        val resp = new Array[Byte](length)
+        in.readFully(resp)
+        assert(new String(resp, StandardCharsets.UTF_8).contains("[REDACTED]"))
+        (System.nanoTime() - t0) / 1e6
+      }
+      (0 until 5).foreach(_ => roundTripMs()) // warm-up
+      val ms = Vector.fill(25)(roundTripMs()).sorted
+      // a delayed ACK stalls each response ≈40 ms; served at once, it takes a few
+      assert(ms(ms.length / 2) < 15.0, s"median ${ms(ms.length / 2)} ms of ${ms.mkString(", ")}")
+    } finally sock.close()
   }
 }
