@@ -20,16 +20,13 @@ object ModelArtifacts {
   /** Files that must exist in a model directory (src/inference.py:39). */
   val RequiredFiles: Set[String] = Set("label_mapping.json", "config.json")
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Reference `_validate_model_path` (src/inference.py:211-219): missing
     * dir → ModelNotFoundError, missing required files → ModelLoadError with
     * the sorted file list — same classes, same message shapes
     * (graft.errors mirrors exceptions.py:54-74).
     */
   def validateModelDir(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     if (!f.exists(new Path(dir)))
       throw graft.errors.ModelNotFoundError(dir)
     val present = f.listStatus(new Path(dir)).map(_.getPath.getName).toSet
@@ -57,7 +54,7 @@ object ModelArtifacts {
     val dropped = m.droppedEntityTypes.map(t => "\"" + esc(t) + "\"").mkString("[", ",", "]")
     val json =
       s"""{"labels":$labels,"label2id":$l2i,"id2label":$i2l,"kept_entity_types":$kept,"dropped_entity_types":$dropped,"num_labels":${m.numLabels}}"""
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     f.mkdirs(new Path(dir))
     val out = f.create(new Path(dir, "label_mapping.json"), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -69,7 +66,7 @@ object ModelArtifacts {
 
   def loadLabelMapping(spark: SparkSession, dir: String): LabelMapping = {
     validateModelDir(spark, dir)
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     val p = new Path(dir, "label_mapping.json")
     val status = f.getFileStatus(p)
     val in = f.open(p)
@@ -111,14 +108,14 @@ object ModelArtifacts {
     val json = centroids.map(_.mkString("[", ",", "]")).mkString(
       s"""{"dim":${centroids.head.length},"nCentroids":${centroids.length},"centroids":[""",
       ",", "]}")
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     f.mkdirs(new Path(dir))
     val out = f.create(new Path(dir, "ivf_centroids.json"), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     val p = new Path(dir, "ivf_centroids.json")
     if (!f.exists(p))
       throw graft.errors.ModelNotFoundError(p.toString)
@@ -158,14 +155,14 @@ object ModelArtifacts {
       first = false
     }
     sb.append("}}")
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     f.mkdirs(new Path(dir))
     val out = f.create(new Path(dir, "ngram_lm.json"), true)
     try out.write(sb.result().getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   def loadNgramModel(spark: SparkSession, dir: String): graft.ppl.NgramLM.Model = {
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     val p = new Path(dir, "ngram_lm.json")
     if (!f.exists(p))
       throw graft.errors.ModelNotFoundError(p.toString)
@@ -205,14 +202,14 @@ object ModelArtifacts {
       s"""[${mg.rank},"${esc(mg.left)}","${esc(mg.right)}",${mg.pairCount}]"""
     }.mkString("[", ",", "]")
     val json = s"""{"numMerges":${m.merges.length},"merges":$rows}"""
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     f.mkdirs(new Path(dir))
     val out = f.create(new Path(dir, "bpe_merges.json"), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   def loadBpeModel(spark: SparkSession, dir: String): graft.ops.Bpe.Model = {
-    val f = fs(spark, dir)
+    val f = LocalFs.get(spark, dir)
     val p = new Path(dir, "bpe_merges.json")
     if (!f.exists(p))
       throw graft.errors.ModelNotFoundError(p.toString)

@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.model.{CodeFile, ScanResult}
@@ -29,7 +31,10 @@ import graft.pipeline.QualityFilter
   *  - lineage: each snapshot records its parent version and per-bucket
   *    metrics (files scanned / kept / scrubbed / errors / PII hits by
   *    category — the north rule's per-partition metric set verbatim),
-  *    accumulated during the write action itself.
+  *    aggregated during the write action itself by the `observe()` named
+  *    `graft.tableio.lineage` on the write input;
+  *  - local roots are written through [[LocalFs]], which sets file modes
+  *    without forking `chmod`.
   */
 object TableIO {
 
@@ -50,28 +55,22 @@ object TableIO {
       version: Int, parent: Int, committedBuckets: Set[Int],
       metrics: Seq[BucketMetrics])
 
-  /** Per-bucket lineage counters collected DURING the write action — one
-    * pass over the pipeline output instead of re-reading the just-written
-    * parquet (which would double every commit's I/O at 100 TB). Flat
-    * Array[Long] of nBuckets × 4 slots; Spark applies accumulator updates
-    * from tasks of an action exactly once per successful task.
+  /** Per-bucket lineage counters, aggregated by the `observe()` on the
+    * write input — one pass over the pipeline output instead of re-reading
+    * the just-written parquet (which would double every commit's I/O at
+    * 100 TB). Flat Array[Long] of nBuckets × [[LineageWidth]] slots: files
+    * scanned / kept / scrubbed / errors, then one hit count per category.
     */
-  private final class BucketMetricsAcc(nBuckets: Int)
-      extends org.apache.spark.util.AccumulatorV2[Array[Long], Array[Long]] {
-    // 4 base counters + one hit counter per category, per bucket
-    private val W = 4 + Categories.length
-    private var data = new Array[Long](nBuckets * W)
-    override def isZero: Boolean = data.forall(_ == 0L)
-    override def copy(): BucketMetricsAcc = {
-      val c = new BucketMetricsAcc(nBuckets); c.data = data.clone(); c
-    }
-    override def reset(): Unit = java.util.Arrays.fill(data, 0L)
-    override def add(v: Array[Long]): Unit = {
-      var i = 0; while (i < data.length) { data(i) += v(i); i += 1 }
-    }
-    def addRow(bucket: Int, kept: Boolean, scrubbed: Boolean, error: Boolean,
-        piiTypes: scala.collection.Seq[String]): Unit = {
-      val base = bucket * W
+  private val LineageWidth = 4 + Categories.length
+
+  private type LineageRow = (Int, Boolean, Boolean, Boolean, Seq[String])
+
+  private final class LineageAgg(nBuckets: Int)
+      extends Aggregator[LineageRow, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](nBuckets * LineageWidth)
+    def reduce(data: Array[Long], row: LineageRow): Array[Long] = {
+      val (bucket, kept, scrubbed, error, piiTypes) = row
+      val base = bucket * LineageWidth
       data(base) += 1
       if (kept) data(base + 1) += 1
       if (scrubbed) data(base + 2) += 1
@@ -80,22 +79,25 @@ object TableIO {
         val ci = Categories.indexOf(t)
         if (ci >= 0) data(base + 4 + ci) += 1
       }
+      data
     }
-    override def merge(other: org.apache.spark.util.AccumulatorV2[Array[Long], Array[Long]]): Unit =
-      add(other.value)
-    override def value: Array[Long] = data
-    def metricsFor(buckets: Seq[Int]): Seq[BucketMetrics] =
-      buckets.filter(b => data(b * W) > 0).map { b =>
-        val base = b * W
-        val hits = Categories.zipWithIndex
-          .collect { case (c, i) if data(base + 4 + i) > 0 => c -> data(base + 4 + i) }
-          .toMap
-        BucketMetrics(b, data(base), data(base + 1), data(base + 2), data(base + 3), hits)
-      }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(data: Array[Long]): Array[Long] = data
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def metricsFor(data: Array[Long], buckets: Seq[Int]): Seq[BucketMetrics] =
+    buckets.filter(b => data(b * LineageWidth) > 0).map { b =>
+      val base = b * LineageWidth
+      val hits = Categories.zipWithIndex
+        .collect { case (c, i) if data(base + 4 + i) > 0 => c -> data(base + 4 + i) }
+        .toMap
+      BucketMetrics(b, data(base), data(base + 1), data(base + 2), data(base + 3), hits)
+    }
 
   private def snapshotDir(root: String) = new Path(root, "_snapshots")
   private def dataDir(root: String) = new Path(root, "data").toString
@@ -139,7 +141,7 @@ object TableIO {
 
   def snapshots(spark: SparkSession, root: String): Seq[Snapshot] = {
     val dir = snapshotDir(root)
-    val f = fs(spark, root)
+    val f = LocalFs.get(spark, root)
     if (!f.exists(dir)) return Seq.empty
     f.listStatus(dir).toSeq
       .filter(s => s.getPath.getName.matches("v\\d+\\.json"))
@@ -158,7 +160,7 @@ object TableIO {
     snapshots(spark, root).lastOption
 
   private def commitSnapshot(spark: SparkSession, root: String, s: Snapshot): Unit = {
-    val f = fs(spark, root)
+    val f = LocalFs.get(spark, root)
     val dir = snapshotDir(root)
     f.mkdirs(dir)
     val tmp = new Path(dir, f".tmp-v${s.version}%05d.json")
@@ -202,7 +204,7 @@ object TableIO {
     val withBucket = input.withColumn("bucket", bucketCol(nBuckets))
     val subset = withBucket.filter(col("bucket").isin(todo: _*))
       .drop("bucket")
-      .as[CodeFile](org.apache.spark.sql.Encoders.product[CodeFile])
+      .as[CodeFile](Encoders.product[CodeFile])
 
     // repartition ON THE BUCKET KEY before the write: without it every
     // write task emits a file into every bucket directory it sees —
@@ -214,38 +216,32 @@ object TableIO {
       .withColumn("bucket", bucketCol(nBuckets))
       .repartition(col("bucket"))
 
-    // per-bucket lineage metrics ride the write itself: a pass-through
-    // mapPartitions inside the FINAL write stage feeds an accumulator while
-    // rows stream to parquet — ONE scan of the pipeline output per commit
-    // (the old shape re-read the written files, doubling commit I/O; kept
-    // below as an audit mode). Result-stage accumulators are applied once
-    // per successful task, so retried/speculative writers can't double-count.
-    val acc = new BucketMetricsAcc(nBuckets)
-    spark.sparkContext.register(acc, s"graft.tableio.bucketMetrics.v${prev.map(_.version + 1).getOrElse(1)}")
-    val schema = results.schema
-    val iBucket = schema.fieldIndex("bucket")
-    val iKeep = schema.fieldIndex("keep")
-    val iPii = schema.fieldIndex("hasPii")
-    val iErr = schema.fieldIndex("error")
-    val iTypes = schema.fieldIndex("piiTypes")
-    val observed = results.mapPartitions { it =>
-      it.map { row =>
-        acc.addRow(row.getInt(iBucket), row.getBoolean(iKeep),
-          row.getBoolean(iPii), !row.isNullAt(iErr),
-          if (row.isNullAt(iTypes)) null else row.getSeq[String](iTypes))
-        row
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    // per-bucket lineage metrics ride the write itself: an observe() on the
+    // write input aggregates them inside the FINAL write stage while rows
+    // stream to parquet — ONE scan of the pipeline output per commit (the
+    // old shape re-read the written files, doubling commit I/O; kept below
+    // as an audit mode). Observed metrics are accumulated once per
+    // successful result task, so retried/speculative writers can't
+    // double-count.
+    val lineage = Observation("graft.tableio.lineage")
+    val counts = udaf(new LineageAgg(nBuckets), Encoders.product[LineageRow])
+      .apply(col("bucket"), col("keep"), col("hasPii"), col("error").isNotNull, col("piiTypes"))
 
     // dynamic partition overwrite: reprocessing a bucket atomically replaces
     // any partial files a crashed run left behind
-    observed.write
+    results.observe(lineage, counts.as("counts")).write
+      .options(LocalFs.WriterOptions)
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(dataDir(root))
 
-    val m = acc.metricsFor(todo)
+    // the key is ABSENT when AQE's empty-relation propagation drops the
+    // observed subtree, which happens only when no row reached the write
+    val data = lineage.get.get("counts")
+      .map(_.asInstanceOf[scala.collection.Seq[Long]].toArray)
+      .getOrElse(new Array[Long](nBuckets * LineageWidth))
+    val m = metricsFor(data, todo)
     // buckets that had no input rows still count as committed
     val emptyBuckets = todo.filterNot(b => m.exists(_.bucket == b))
       .map(b => BucketMetrics(b, 0, 0, 0, 0))
@@ -305,5 +301,5 @@ object TableIO {
   }
 
   def results(df: DataFrame): Dataset[ScanResult] =
-    df.drop("bucket").as[ScanResult](org.apache.spark.sql.Encoders.product[ScanResult])
+    df.drop("bucket").as[ScanResult](Encoders.product[ScanResult])
 }

@@ -1,6 +1,9 @@
 package graft.io
 
-import java.nio.file.Files
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -102,6 +105,48 @@ class TableIOSpec extends AnyFunSuite {
     // the audit mode re-derives them from disk — they must agree exactly
     val audit = TableIO.auditMetrics(spark, root, 0 until 8)
     assert(snap.metrics.filter(_.filesScanned > 0).sortBy(_.bucket) == audit)
+  }
+
+  test("todo buckets that receive no rows still commit, with zero metrics") {
+    // no row at all reaches the write: AQE may drop the observed subtree
+    val root = tmpRoot()
+    val none = TableIO.runResumable(
+      Fixtures.generate(spark, 300).filter(lit(false)), root, nBuckets = 4)
+    assert(none.committedBuckets == (0 until 4).toSet)
+    assert(none.metrics.sortBy(_.bucket) ==
+      (0 until 4).map(b => TableIO.BucketMetrics(b, 0, 0, 0, 0)))
+    // a few rows over many buckets: most todo buckets stay empty
+    val sparse = TableIO.runResumable(Fixtures.generate(spark, 5), tmpRoot(), nBuckets = 64)
+    assert(sparse.committedBuckets == (0 until 64).toSet)
+    assert(sparse.metrics.map(_.filesScanned).sum == 5)
+    assert(sparse.metrics.count(_.filesScanned == 0) >= 59)
+    assert(sparse.metrics.filter(_.filesScanned == 0).forall(m =>
+      m == TableIO.BucketMetrics(m.bucket, 0, 0, 0, 0)))
+  }
+
+  test("a write task that fails its first attempt commits the rows and lineage of a clean run") {
+    val clean = tmpRoot()
+    val faulty = tmpRoot()
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmOpts = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-agentlib") || a.startsWith("-javaagent"))
+    val cmd = Seq(java, "-Xmx1g") ++ jvmOpts ++ Seq("-cp", System.getProperty("java.class.path"),
+      FaultInjectedCommit.getClass.getName.stripSuffix("$"), clean, faulty, "1000", "8")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() == 0, out.takeRight(4000))
+    assert(out.linesIterator.contains("INJECTED 1"), out.takeRight(4000))
+
+    val snap = TableIO.lastSnapshot(spark, faulty).get
+    assert(snap == TableIO.lastSnapshot(spark, clean).get)
+    def manifest(root: String) = Files.readAllBytes(Paths.get(root, "_snapshots", "v00001.json"))
+    assert(manifest(faulty).sameElements(manifest(clean)))
+    assert(snap.metrics.map(_.filesScanned).sum == 1000)
+    assert(snap.metrics.filter(_.filesScanned > 0).sortBy(_.bucket) ==
+      TableIO.auditMetrics(spark, faulty, 0 until 8))
+    val a = TableIO.readCommitted(spark, faulty)
+    val b = TableIO.readCommitted(spark, clean)
+    assert(a.count() == 1000 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
   test("uncommitted data is invisible even if files exist on disk") {
